@@ -167,8 +167,11 @@ object Bench {
     // the line with "[info] " and its "[success] Total time" trailer
     // printed after it (both fixed in build.sbt — StdoutOutput +
     // showSuccess:=false). Per-query values are rounded to milliseconds
-    // so the line stays compact (~4 KB for 169 queries); spark.stop()
-    // runs FIRST so no shutdown logging can interleave after the line.
+    // so the line stays compact (~4 KB for 169 queries); `value` is the
+    // full-precision sum and is authoritative — the rounded `queries`
+    // entries are display precision and need not add up to it exactly.
+    // spark.stop() runs FIRST so no shutdown logging can interleave after
+    // the line.
     spark.stop()
     val qsMs = ok.map { case (k, v) =>
       "\"" + k + "\":" + (math.round(v * 1000) / 1000.0)

@@ -29,4 +29,28 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.GraftSparkExtensions")
     master.fold(b)(b.master)
   }
+
+  /** Parse `SPARK_GRAFT_CONF`-style extra confs, `"k1=v1,k2=v2"`. Each
+    * entry splits at its FIRST `=`, so a value may itself contain `=`
+    * (e.g. a `-Dkey=value` JVM option); an entry with no `=` or an empty
+    * key is skipped with a warning instead of vanishing silently.
+    */
+  def parseConfs(spec: String): Seq[(String, String)] =
+    spec.split(',').toSeq.map(_.trim).filter(_.nonEmpty).flatMap { entry =>
+      entry.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => Some(k.trim -> v.trim)
+        case _ =>
+          org.slf4j.LoggerFactory.getLogger(getClass)
+            .warn(s"ignoring malformed conf entry '$entry' (expected key=value)")
+          None
+      }
+    }
+
+  /** `b` plus the extra confs of the `SPARK_GRAFT_CONF` environment
+    * variable, if set — the knob the profiling tools (BenchSome, Explain)
+    * share.
+    */
+  def withEnvConfs(b: SparkSession.Builder): SparkSession.Builder =
+    sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(parseConfs)
+      .foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
 }

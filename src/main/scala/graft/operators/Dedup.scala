@@ -15,7 +15,8 @@ import graft.Output._
   * and every self-join here is *blocked* — by LSH band bucket (d2), simhash
   * band (d3), source (d4), or label (d5) — so shuffle volume is proportional
   * to candidate pairs, not to n². At 100 TB the blocked joins shuffle on
-  * their block key once; nothing is ever collected to the driver.
+  * their block key once. The one driver collect (d6's pair list) is
+  * bounded by a row cap, with a distributed fallback above it.
   */
 object Dedup {
 
@@ -520,25 +521,109 @@ object Dedup {
 
   /** d6: transitive dedup groups — connected components over the d4
     * near-dup pairs, so A~B and B~C land in one group even when A~C was
-    * never scored. Pregel-style min-label propagation: each superstep joins
-    * labels to the edge list and takes the neighborhood minimum, until a
-    * superstep changes nothing. Per-step work is two shuffles proportional
-    * to |edges|; the only driver-side value is the scalar convergence count
-    * (loop control, not data). Components here are near-cliques, so the
-    * iteration count tracks component diameter (small), not corpus size.
-    * The converged label frame is memo-shared: d7 projects it directly
-    * instead of re-running the whole iteration.
+    * never scored. Each document's group is the smallest doc_id of its
+    * component; a document with no near-dup pair is its own group.
+    *
+    * The pair list is pulled to the driver with ONE bounded collect of at
+    * most `driverPairCap + 1` rows (a scan of the d4 memo). When it fits,
+    * components come from a driver-side union-find (union by the
+    * smaller root, so every root is its component's minimum doc_id —
+    * exactly the fixpoint of min-label propagation, so the labels are
+    * bit-identical), and the small (doc_id, group_id) frame is broadcast
+    * into the singleton re-attach join. Above the cap, the pair list is a
+    * data-proportional frame that does not belong on the driver, and the
+    * Pregel-style distributed loop takes over: min-label propagation with
+    * pointer doubling, superstep by superstep, until the label sum stops
+    * changing. `maxIters` and its non-convergence warning govern only that
+    * fallback. Both paths are spec-pinned equal.
+    *
+    * The converged label frame is memo-shared: d7, d9 and x37 project it
+    * instead of re-running the components. The memo key leaves the cap out
+    * on purpose — both paths build the same frame.
     */
   def dedupGroups(spark: SparkSession, dir: String,
-                  minJaccard: Double = 0.8, maxIters: Int = 20): DataFrame =
+                  minJaccard: Double = 0.8, maxIters: Int = 20,
+                  driverPairCap: Int = DriverPairCap): DataFrame =
     graft.CacheRegistry.memoShared(
       s"d6groups:${spark.sparkContext.applicationId}:$dir:$minJaccard:" +
         s"$maxIters:${graft.Tables.substrate(spark)}")(
-      computeDedupGroups(spark, dir, minJaccard, maxIters))
+      computeDedupGroups(spark, dir, minJaccard, maxIters, driverPairCap))
+
+  /** Pair cap for d6's driver-side union-find. A collected pair costs
+    * about 50 B of driver heap (a specialized (Long, Long) tuple, its
+    * array slot and two entries of the sorted id array), so the cap bounds
+    * that transient at ~100 MB; the label frame built from it holds at
+    * most one row per document. The
+    * 10× MakeScale slice (50,000 documents, 1.48 M pairs) stays on the
+    * driver path; above the cap the distributed loop takes over.
+    */
+  private[graft] val DriverPairCap = 2000000
 
   private def computeDedupGroups(spark: SparkSession, dir: String,
-                                 minJaccard: Double, maxIters: Int): DataFrame = {
+                                 minJaccard: Double, maxIters: Int,
+                                 driverPairCap: Int): DataFrame = {
+    import spark.implicits._
     val pairs = sharedPairs(spark, dir, minJaccard)
+    val labels = graft.DriverCollect
+      .collectAtMost(pairs.as[(Long, Long)], driverPairCap) match {
+        case Some(local) =>
+          broadcast(unionFindLabels(local).toSeq.toDF("doc_id", "group_id"))
+        case None => propagateLabels(pairs, maxIters)
+      }
+    // singletons re-attach once: the labels cover pair vertices only
+    Tables.documents(spark, dir)
+      .select(col("doc_id"))
+      .join(labels.select(col("doc_id").as("l_id"), col("group_id")),
+        col("doc_id") === col("l_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("group_id"), col("doc_id")).as("group_id"))
+      .orderedBy("doc_id")
+  }
+
+  /** (doc_id, group_id) for every vertex of the pair list, group_id being
+    * the smallest doc_id of its connected component. Vertices are indexed
+    * by their rank in the sorted distinct id array, so union by the smaller
+    * root index is union by the smaller doc_id; path halving keeps every
+    * find near-constant.
+    */
+  private def unionFindLabels(pairs: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val all = new Array[Long](pairs.length * 2)
+    var i = 0
+    while (i < pairs.length) {
+      all(2 * i) = pairs(i)._1
+      all(2 * i + 1) = pairs(i)._2
+      i += 1
+    }
+    java.util.Arrays.sort(all)
+    var n = 0
+    i = 0
+    while (i < all.length) {
+      if (n == 0 || all(i) != all(n - 1)) { all(n) = all(i); n += 1 }
+      i += 1
+    }
+    val parent = Array.tabulate(n)(identity)
+    def find(v: Int): Int = {
+      var x = v
+      while (parent(x) != x) {
+        parent(x) = parent(parent(x))
+        x = parent(x)
+      }
+      x
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(all, 0, n, id)
+    pairs.foreach { case (a, b) =>
+      val ra = find(index(a))
+      val rb = find(index(b))
+      if (ra < rb) parent(rb) = ra
+      else if (rb < ra) parent(ra) = rb
+    }
+    Array.tabulate(n)(v => (all(v), all(find(v))))
+  }
+
+  /** The distributed fallback: min-label propagation over the pair
+    * vertices, superstep by superstep, to the fixpoint (or `maxIters`).
+    */
+  private def propagateLabels(pairs: DataFrame, maxIters: Int): DataFrame = {
     val edges = pairs
       .union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
       .persist()
@@ -608,14 +693,7 @@ object Dedup {
         .warn(s"dedupGroups stopped at maxIters=$maxIters without converging — " +
           "group labels may be partially propagated; raise maxIters " +
           "(pointer doubling needs ~log2(component diameter) supersteps)")
-    // singletons re-attach once: converged labels cover pair vertices only
-    Tables.documents(spark, dir)
-      .select(col("doc_id"))
-      .join(labels.select(col("doc_id").as("l_id"), col("group_id")),
-        col("doc_id") === col("l_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("group_id"), col("doc_id")).as("group_id"))
-      .orderedBy("doc_id")
+    labels
   }
 
   /** d7: the dedup *decision* — one row per document with its transitive

@@ -713,9 +713,11 @@ object TextAnalysis {
     val wordFreq = Tables.documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
+    // no orderBy: the table is learned in rank order and a local frame
+    // keeps its row order, so a Spark sort would only add a sampling job
+    // and a sort job
     sharedMerges(spark, dir, merges, wordFreq, driverVocabCap)
       .toDF("rank", "left", "right", "pair_count")
-      .orderBy("rank")
   }
 
   /** The learned merge table, memo-shared per (dir, merges): x23 and x24
@@ -748,9 +750,10 @@ object TextAnalysis {
     * vocabulary frame — shared by x23 (which builds the vocab from the
     * corpus) and x24 (which derives it from its per-source frequency
     * table, so train + apply together cost ONE corpus scan). The split
-    * symbol table is built once (cached, released by the harness); the
-    * incremental driver trainer takes it when the vocabulary fits
-    * `driverVocabCap`, the distributed loop otherwise. Both paths
+    * symbol table goes to the driver in one bounded collect of at most
+    * `driverVocabCap + 1` rows; the incremental driver trainer takes it
+    * when the vocabulary fits, the distributed loop otherwise (its first
+    * step checkpoints the table, so the table is not cached). Both paths
     * implement identical semantics — argmax by (count desc, pair text
     * asc), greedy leftmost rewrite — and are spec-pinned equal.
     */
@@ -758,12 +761,12 @@ object TextAnalysis {
                                  merges: Int,
                                  driverVocabCap: Long = DriverVocabCap): Seq[(Int, String, String, Long)] = {
     import spark.implicits._
-    val vocab0 = graft.CacheRegistry.persistTracked(
-      wordFreq.select(split(col("w"), "").as("sym"), col("freq")))
-    if (vocab0.count() <= driverVocabCap)
-      learnMergesIncremental(vocab0.as[(Seq[String], Long)].collect(), merges)
-    else
-      learnMergesDistributed(spark, vocab0, merges)
+    val vocab0 = wordFreq.select(split(col("w"), "").as("sym"), col("freq"))
+    val cap = math.min(driverVocabCap, Int.MaxValue - 1L).toInt
+    graft.DriverCollect.collectAtMost(vocab0.as[(Seq[String], Long)], cap) match {
+      case Some(vocab) => learnMergesIncremental(vocab, merges)
+      case None => learnMergesDistributed(spark, vocab0, merges)
+    }
   }
 
   /** Greedy leftmost non-overlapping single-merge rewrite — the one

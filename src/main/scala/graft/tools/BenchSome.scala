@@ -15,18 +15,14 @@ object BenchSome {
     val names = args.drop(2).toSet
     val cpus = sys.env.getOrElse(
       "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val builder = SparkSession.builder()
+    // extra confs: SPARK_GRAFT_CONF="k1=v1,k2=v2"
+    val spark = graft.GraftSession.withEnvConfs(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // extra confs: SPARK_GRAFT_CONF="k1=v1,k2=v2"
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(',')).map(_.split('=')).collect {
-        case Array(k, v) => builder.config(k.trim, v.trim)
-      }
-    val spark = builder.getOrCreate()
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     Seq("region", "nation", "customer", "supplier", "part", "orders",

@@ -12,19 +12,15 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.drop(1)
-    val builder = SparkSession.builder()
+    // extra confs: SPARK_GRAFT_CONF="k1=v1,k2=v2" (the BenchSome knob) —
+    // e.g. autoBroadcastJoinThreshold=-1 to dump the forced-shuffle plan
+    val spark = graft.GraftSession.withEnvConfs(SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.adaptive.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // extra confs: SPARK_GRAFT_CONF="k1=v1,k2=v2" (the BenchSome knob) —
-    // e.g. autoBroadcastJoinThreshold=-1 to dump the forced-shuffle plan
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(',')).map(_.split('=')).collect {
-        case Array(k, v) => builder.config(k.trim, v.trim)
-      }
-    val spark = builder.getOrCreate()
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"==== $name ====")

@@ -87,6 +87,20 @@ class DedupSpec extends SparkSpec {
     assert(!got.keySet.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
+  /** d6 labels by both component paths: the driver union-find (default
+    * cap) and the distributed superstep loop (cap 0 forces it). Both
+    * paths share one memo key, so the memo is released around each build.
+    */
+  private def groupsBothWays(dir: String): (Set[(Long, Long)], Set[(Long, Long)]) = {
+    def groups(cap: Int) =
+      try {
+        CacheRegistry.releaseShared()
+        Dedup.dedupGroups(spark, dir, driverPairCap = cap)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      } finally CacheRegistry.releaseShared()
+    (groups(Dedup.DriverPairCap), groups(0))
+  }
+
   test("d6 dedup groups close transitively: A~B and B~C group A,B,C together") {
     // 12-word docs differing by one word pairwise: J(A,B)=J(B,C)=11/13 >= 0.8
     // but J(A,C)=10/14 < 0.8 — only the transitive closure groups all three
@@ -102,6 +116,56 @@ class DedupSpec extends SparkSpec {
     val groups = Dedup.dedupGroups(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(groups == Set((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L)))
+    val (viaDriver, viaLoop) = groupsBothWays(dir)
+    assert(viaDriver == groups && viaLoop == groups,
+      s"driver $viaDriver vs distributed $viaLoop")
+  }
+
+  test("d6 driver union-find equals the distributed loop on a 20-doc near-dup path") {
+    // doc k holds the 12-word window t_k..t_{k+11}: neighbours share 11 of
+    // 13 words (J = 0.846) and docs two apart 10 of 14 (J = 0.714), so
+    // the pairs form a simple path. The ids are scrambled along the path
+    // and the minimum sits mid-path, so the distributed loop needs several
+    // pointer-doubling supersteps to reach the fixpoint.
+    val ids = Seq(17L, 4L, 12L, 9L, 20L, 6L, 15L, 2L, 11L, 8L,
+      19L, 5L, 14L, 3L, 10L, 18L, 7L, 16L, 13L, 21L)
+    val path = ids.zipWithIndex.map { case (id, k) =>
+      (id, (k until k + 12).map(t => s"t$t").mkString(" "), "s0")
+    }
+    val dir = writeDocs(path :+ ((1L, "a lone document nobody copies", "s0")))
+    val pairs = Dedup.ngramJaccard(spark, dir).count()
+    assert(pairs == ids.size - 1, s"the fixture must be a simple path, got $pairs pairs")
+    val (viaDriver, viaLoop) = groupsBothWays(dir)
+    assert(viaDriver == (ids.map(_ -> 2L) :+ (1L -> 1L)).toSet, s"driver $viaDriver")
+    assert(viaDriver == viaLoop, s"driver $viaDriver vs distributed $viaLoop")
+    // the fixture really needs several supersteps: stopped after one, the
+    // loop is still short of the fixpoint
+    val oneStep =
+      try Dedup.dedupGroups(spark, dir, maxIters = 1, driverPairCap = 0)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      finally CacheRegistry.releaseShared()
+    assert(oneStep != viaLoop, "one superstep must not already converge")
+  }
+
+  test("d6 on an edgeless corpus: both paths make every document its own group") {
+    val dir = writeDocs(Seq(
+      (3L, "alpha beta gamma", "s0"), (1L, "delta epsilon zeta", "s0"),
+      (2L, "eta theta iota", "s1")))
+    val (viaDriver, viaLoop) = groupsBothWays(dir)
+    assert(viaDriver == Set((1L, 1L), (2L, 2L), (3L, 3L)), s"driver $viaDriver")
+    assert(viaDriver == viaLoop, s"driver $viaDriver vs distributed $viaLoop")
+  }
+
+  test("d6 keeps components in different sources apart, both paths") {
+    // the same near-dup texts in two sources: d4 pairs only within a
+    // source, so the identical cross-source copies form two components
+    val a = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 wa"
+    val b = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 wb"
+    val dir = writeDocs(Seq(
+      (5L, a, "s0"), (2L, b, "s0"), (1L, a, "s1"), (7L, b, "s1")))
+    val (viaDriver, viaLoop) = groupsBothWays(dir)
+    assert(viaDriver == Set((2L, 2L), (5L, 2L), (1L, 1L), (7L, 1L)), s"driver $viaDriver")
+    assert(viaDriver == viaLoop, s"driver $viaDriver vs distributed $viaLoop")
   }
 
   test("d4 word-set jaccard is exact") {
